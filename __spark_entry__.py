@@ -341,7 +341,6 @@ def q_link_only_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dsa": docs.filter(F.col(DOC_UID) % 2 == 0),
             "dsb": docs.filter(F.col(DOC_UID) % 2 == 1),
         },
-        unique_id_column=DOC_UID,
     )
     pairs = block_using_rules(
         cat,

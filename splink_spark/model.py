@@ -17,8 +17,10 @@ Fellegi–Sunter semantics reproduced here (SURVEY.md §1.3):
 
 from __future__ import annotations
 
+import functools
 import json
 import math
+import re
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -201,6 +203,174 @@ class Comparison:
         )
 
 
+# ---------------------------------------------------------------------------
+# Blocking-rule grammar: the one reader of rule text
+# ---------------------------------------------------------------------------
+
+# an ``l.``/``r.`` column reference (either letter case, spaces around
+# the dot, bare or backtick-quoted name), matched on the masked text
+_SIDE_REF = re.compile(r"\b([lr])\s*\.\s*(`#*`|\w+)", re.IGNORECASE)
+# nesting (parens, CASE..END), connectives and the operators that
+# contain '=', matched on the masked text; ``l.end`` is a column
+_TOKEN = re.compile(
+    r"<=>|[<>!=]=|[=()]|(?<![.\w])(?:and|or|case|end)\b", re.IGNORECASE
+)
+_IDENT = re.compile(r"`#*`|\b[A-Za-z_]\w*")
+_KEYWORDS = {
+    "and", "or", "not", "case", "when", "then", "else", "end",
+    "null", "is", "in", "between", "like", "cast", "as", "true",
+    "false", "distinct", "interval",
+}
+
+
+def _mask(s: str) -> str:
+    """Same-length copy of ``s`` with the CONTENT of single-quoted
+    string literals (``''`` and backslash escapes) and backtick-quoted
+    identifiers (doubled-backtick escape) replaced by ``#``, quotes
+    kept, so structural
+    scans (parens, AND/OR, '=', ``l.``) cannot be corrupted by literals
+    like ``':)'`` or ``'a AND l.x'``. Slice the ORIGINAL string at
+    indices found on the mask."""
+    out = list(s)
+    quote = None
+    i, n = 0, len(s)
+    while i < n:
+        c = s[i]
+        if quote is None:
+            if c in "'`":
+                quote = c
+        elif c == quote and i + 1 < n and s[i + 1] == quote:
+            out[i] = out[i + 1] = "#"  # doubled-quote escape
+            i += 1
+        elif c == quote:
+            quote = None
+        else:
+            out[i] = "#"
+            if c == "\\" and quote == "'" and i + 1 < n:
+                out[i + 1] = "#"
+                i += 1
+        i += 1
+    return "".join(out)
+
+
+def _depth0_tokens(text: str) -> list[tuple[str, int, int]]:
+    """(upper-cased token, start, end) of the connectives and
+    comparison operators outside every paren / CASE..END nesting."""
+    out, depth = [], 0
+    for m in _TOKEN.finditer(_mask(text)):
+        t = m.group(0).upper()
+        if t in ("(", "CASE"):
+            depth += 1
+        elif t in (")", "END"):
+            depth -= 1
+        elif depth == 0:
+            out.append((t, m.start(), m.end()))
+    return out
+
+
+def _strip_parens(p: str) -> str:
+    """Drop parens that wrap the whole of ``p``."""
+    p = p.strip()
+    while p.startswith("(") and p.endswith(")"):
+        depth = 0
+        for ch in _mask(p[1:-1]):
+            depth += (ch == "(") - (ch == ")")
+            if depth < 0:
+                return p
+        if depth:
+            return p
+        p = p[1:-1].strip()
+    return p
+
+
+def _conjuncts(text: str) -> list[str] | None:
+    """``text`` split on AND (flattening parenthesised AND groups);
+    None if it is an OR at its top level. A parenthesised OR group
+    stays one conjunct."""
+    text = _strip_parens(text)
+    cuts = []
+    for t, s, e in _depth0_tokens(text):
+        if t == "OR":
+            return None
+        if t == "AND":
+            cuts.append((s, e))
+    if not cuts:
+        return [text]
+    bounds = [0] + [x for cut in cuts for x in cut] + [len(text)]
+    out: list[str] = []
+    for s, e in zip(bounds[::2], bounds[1::2]):
+        part = text[s:e].strip()
+        out.extend(_conjuncts(part) or [part])
+    return out
+
+
+def _sides(expr: str) -> set[str]:
+    return {m.group(1).lower() for m in _SIDE_REF.finditer(_mask(expr))}
+
+
+def _strip_alias(expr: str, side: str) -> str:
+    """``expr`` with its ``<side>.`` qualifiers removed."""
+    out, prev = [], 0
+    for m in _SIDE_REF.finditer(_mask(expr)):
+        if m.group(1).lower() == side:
+            out.append(expr[prev : m.start(1)])
+            prev = m.start(2)
+    out.append(expr[prev:])
+    return "".join(out)
+
+
+def _equi_component(conjunct: str) -> tuple[str, str] | None:
+    """(l-expression, r-expression) if ``conjunct`` is ``f(l) = g(r)``
+    (either orientation): one top-level '=' and no NOT around it."""
+    ops = [(t, s) for t, s, _ in _depth0_tokens(conjunct) if t != "AND"]
+    if len(ops) != 1 or ops[0][0] != "=" or re.match(r"(?i)not\b", conjunct):
+        return None
+    eq = ops[0][1]
+    a, b = conjunct[:eq].strip(), conjunct[eq + 1 :].strip()
+    sa, sb = _sides(a), _sides(b)
+    if sa == {"l"} and sb == {"r"}:
+        return a, b
+    if sa == {"r"} and sb == {"l"}:
+        return b, a
+    return None
+
+
+@functools.lru_cache(maxsize=None)
+def _rule_columns(rule: str) -> frozenset[str]:
+    return frozenset(
+        rule[m.start(2) : m.end(2)].strip("`").replace("``", "`")
+        for m in _SIDE_REF.finditer(_mask(rule))
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _rule_equi_components(rule: str) -> tuple[tuple[str, str], ...]:
+    return tuple(e for e in map(_equi_component, _conjuncts(rule) or []) if e)
+
+
+def _alias_columns(expr: str, side: str) -> str:
+    """``expr`` with every bare column reference qualified by ``side``
+    (function names, keywords, already-qualified names and literals
+    are left alone); a lone column name is always qualified."""
+    expr = expr.strip()
+    masked = _mask(expr)
+    if _IDENT.fullmatch(masked):
+        return f"{side}.{expr}"
+    out, prev = [], 0
+    for m in _IDENT.finditer(masked):
+        tok = expr[m.start() : m.end()]
+        if (
+            masked[: m.start()].rstrip().endswith(".")
+            or masked[m.end() :].lstrip().startswith("(")
+            or tok.lower() in _KEYWORDS
+        ):
+            continue
+        out.append(expr[prev : m.start()] + f"{side}.")
+        prev = m.start()
+    out.append(expr[prev:])
+    return "".join(out)
+
+
 @dataclass
 class BlockingRule:
     """A blocking rule: a boolean join condition over ``l.`` / ``r.``
@@ -210,6 +380,13 @@ class BlockingRule:
     mirrors the reference's salted blocking (splink/blocking.py
     salting_partitions), but our salt is deterministic (hash-based) —
     SURVEY.md §7.3(e).
+
+    The rule grammar the engine reads (everything else about the rule
+    is Spark's to parse): string literals and backtick-quoted names are
+    opaque; the rule splits on top-level AND (parenthesised AND groups
+    flatten; parens and CASE..END nest); each conjunct of the form
+    ``f(l) = g(r)`` is an equi component, i.e. a join key Catalyst
+    extracts. A top-level OR leaves no equi components.
     """
 
     rule: str
@@ -226,6 +403,28 @@ class BlockingRule:
     def oracle_rule(self) -> str:
         return self.sql_rule or self.rule
 
+    @property
+    def columns(self) -> frozenset[str]:
+        """Names of the columns the rule reads as ``l.<c>`` / ``r.<c>``."""
+        return _rule_columns(self.rule)
+
+    @property
+    def equi_components(self) -> list[tuple[str, str]]:
+        """The ``f(l) = g(r)`` AND-conjuncts as (l-expression,
+        r-expression) strings. Every pair the rule matches satisfies
+        all of them, so a key computed from them is equal on both sides
+        of the join."""
+        return list(_rule_equi_components(self.rule))
+
+    @property
+    def equi_keys(self) -> list[tuple[str, str]]:
+        """``equi_components`` with the ``l.``/``r.`` qualifiers
+        removed: expressions over one unaliased input frame."""
+        return [
+            (_strip_alias(a, "l"), _strip_alias(b, "r"))
+            for a, b in self.equi_components
+        ]
+
     def to_dict(self) -> dict[str, Any]:
         return {
             "rule": self.rule,
@@ -235,10 +434,15 @@ class BlockingRule:
         }
 
     @classmethod
-    def from_dict(cls, d: dict[str, Any]) -> BlockingRule:
+    def from_dict(cls, d: dict[str, Any] | str) -> BlockingRule:
         if isinstance(d, str):
             return cls(rule=d)
         return cls(**d)
+
+    @classmethod
+    def coerce(cls, rule: BlockingRule | str) -> BlockingRule:
+        """``rule`` itself, or a BlockingRule over the rule string."""
+        return rule if isinstance(rule, BlockingRule) else cls(rule=rule)
 
 
 def block_on(
@@ -262,51 +466,9 @@ def block_on(
     """
     if not cols:
         raise ValueError("block_on needs at least one column/expression")
-    import re
-
-    _KEYWORDS = {
-        "and", "or", "not", "case", "when", "then", "else", "end",
-        "null", "is", "in", "between", "like", "cast", "as", "true",
-        "false", "distinct", "interval",
-    }
-
-    def _alias(expr: str, side: str) -> str:
-        expr = expr.strip()
-        if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", expr):
-            return f"{side}.{expr}"
-        # alias bare identifiers inside the expression (not already
-        # qualified, not function names, not quoted literals)
-        out, i, n = [], 0, len(expr)
-        while i < n:
-            ch = expr[i]
-            if ch == "'":  # skip string literal
-                j = i + 1
-                while j < n and expr[j] != "'":
-                    j += 1
-                out.append(expr[i : j + 1])
-                i = j + 1
-                continue
-            m = re.match(r"[A-Za-z_][A-Za-z0-9_]*", expr[i:])
-            if m:
-                tok = m.group(0)
-                j = i + len(tok)
-                rest = expr[j:].lstrip()
-                prev = expr[:i].rstrip()
-                if rest.startswith("("):  # function call
-                    out.append(tok)
-                elif prev.endswith("."):  # already qualified
-                    out.append(tok)
-                elif tok.lower() in _KEYWORDS:
-                    out.append(tok)
-                else:
-                    out.append(f"{side}.{tok}")
-                i = j
-                continue
-            out.append(ch)
-            i += 1
-        return "".join(out)
-
-    conjuncts = [f"{_alias(c, 'l')} = {_alias(c, 'r')}" for c in cols]
+    conjuncts = [
+        f"{_alias_columns(c, 'l')} = {_alias_columns(c, 'r')}" for c in cols
+    ]
     return BlockingRule(
         rule=" AND ".join(conjuncts),
         salting_partitions=salting_partitions,
@@ -336,7 +498,6 @@ class Settings:
     unique_id_column_name: str = "unique_id"
     source_dataset_column_name: str = "source_dataset"
     probability_two_random_records_match: float = 1e-4
-    retain_matching_columns: bool = True
     em_convergence: float = 1e-4
     max_iterations: int = 25
     # derived pair columns computed ONCE before the gamma cascade
@@ -387,7 +548,6 @@ class Settings:
             "probability_two_random_records_match": (
                 self.probability_two_random_records_match
             ),
-            "retain_matching_columns": self.retain_matching_columns,
             "em_convergence": self.em_convergence,
             "max_iterations": self.max_iterations,
             "derived_pair_expressions": dict(self.derived_pair_expressions),
@@ -406,7 +566,6 @@ class Settings:
             probability_two_random_records_match=d.get(
                 "probability_two_random_records_match", 1e-4
             ),
-            retain_matching_columns=d.get("retain_matching_columns", True),
             em_convergence=d.get("em_convergence", 1e-4),
             max_iterations=d.get("max_iterations", 25),
             derived_pair_expressions=dict(

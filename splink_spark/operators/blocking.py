@@ -45,7 +45,6 @@ from __future__ import annotations
 
 import dataclasses
 import math
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -71,137 +70,41 @@ def _ordering_condition(link_mode: bool, uid: str, source_col: str) -> str:
     return f"l.{uid} < r.{uid}"
 
 
-_EQUI_RE = re.compile(
-    r"\bl\.(\w+)\s*=\s*r\.(\w+)|\br\.(\w+)\s*=\s*l\.(\w+)", re.IGNORECASE
-)
+def extract_equi_components(rule: str) -> list[tuple[str, str]]:
+    """The rule's top-level AND-conjunct equalities ``f(l) = g(r)`` as
+    (left-expression, right-expression) strings; [] when it has a
+    top-level OR or no such equality (see ``BlockingRule``)."""
+    return BlockingRule(rule).equi_components
 
 
 def rule_has_equi_component(rule: str) -> bool:
-    """True if the rule contains at least one ``f(l) = g(r)`` equality
-    that Catalyst can extract as a join key — bare columns (l.x = r.x,
-    the regex fast path) or derived-expression keys like
-    ``least(l.a, l.b) = least(r.a, r.b)`` (via
-    ``extract_equi_components``, which also requires no top-level OR
-    around them). Conservative textual check."""
-    return bool(_EQUI_RE.search(rule)) or bool(
-        extract_equi_components(rule)
+    """True if Catalyst can extract at least one join key from the
+    rule, i.e. it will not plan as a nested-loop cartesian."""
+    return bool(extract_equi_components(rule))
+
+
+def _hot_key_frame(
+    df: DataFrame, right: DataFrame, br: BlockingRule, names: list[str]
+) -> DataFrame:
+    """One row per input row carrying the rule's equi-key values as
+    ``names``: left-key expressions over ``df`` plus, when ``right`` is
+    a different frame, right-key expressions over it (a hot key
+    concentrated on either side is seen). ``__bc`` is 1 on the rows of
+    the side ``_governed_join`` broadcasts (``right``; in dedupe mode
+    that is ``df`` itself), else 0."""
+    keys = br.equi_keys
+    keyed = df.select(
+        *[F.expr(a).alias(k) for (a, _), k in zip(keys, names)],
+        F.lit(int(right is df)).alias("__bc"),
     )
-
-
-def _mask_literals(s: str) -> str:
-    """Same-length copy of ``s`` with the CONTENT of single-quoted SQL
-    string literals replaced by ``x`` (quotes kept, '' escape
-    handled), so structural scans (parens, AND/OR, '=') cannot be
-    corrupted by literals like ``':)'`` or ``'a AND b'``. Slice the
-    ORIGINAL string at indices found on the mask."""
-    out = list(s)
-    i, n = 0, len(s)
-    in_str = False
-    while i < n:
-        c = s[i]
-        if in_str:
-            if c == "'":
-                if i + 1 < n and s[i + 1] == "'":  # '' escape
-                    out[i] = out[i + 1] = "x"
-                    i += 2
-                    continue
-                in_str = False
-            else:
-                out[i] = "x"
-        elif c == "'":
-            in_str = True
-        i += 1
-    return "".join(out)
-
-
-def _top_level_conjuncts(rule: str) -> list[str] | None:
-    """Split ``rule`` on paren-depth-0 ANDs; None if a depth-0 OR
-    exists (the conjunct property the skew governor relies on fails).
-    Structure is scanned on the literal-masked copy, so quoted
-    strings containing AND/OR/parens are inert."""
-    cuts: list[tuple[int, int]] = []
-    depth = 0
-    for m in re.finditer(r"(?i)\bAND\b|\bOR\b|[()]", _mask_literals(rule)):
-        t = m.group(0)
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0:
-            if t.upper() == "OR":
-                return None
-            cuts.append((m.start(), m.end()))
-    parts, prev = [], 0
-    for s0, e0 in cuts:
-        parts.append(rule[prev:s0])
-        prev = e0
-    parts.append(rule[prev:])
-    return [p.strip() for p in parts]
-
-
-def _strip_balanced_parens(p: str) -> str:
-    while p.startswith("(") and p.endswith(")"):
-        inner = p[1:-1]
-        depth = 0
-        ok = True
-        for ch in _mask_literals(inner):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    ok = False
-                    break
-        if ok and depth == 0:
-            p = inner.strip()
-        else:
-            break
-    return p
-
-
-def extract_equi_components(rule: str) -> list[tuple[str, str]]:
-    """Top-level AND-conjunct equalities ``f(l) = g(r)`` of ``rule``,
-    returned as (left-expression, right-expression) strings.
-
-    Every pair matched by the rule satisfies ALL of these, so hot-key
-    membership computed from them is identical on both sides of the
-    join — the property that makes the skew governor's hot/normal
-    split exact. Returns [] when the rule has a top-level OR (the
-    conjunct property then fails) or no such equality exists.
-    """
-    parts = _top_level_conjuncts(rule)
-    if parts is None:
-        return []
-    out: list[tuple[str, str]] = []
-    for p in parts:
-        p = _strip_balanced_parens(p)
-        depth = 0
-        eq_pos: list[int] = []
-        for idx, ch in enumerate(_mask_literals(p)):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "=" and depth == 0:
-                if idx and p[idx - 1] in "<>!=":
-                    continue
-                if idx + 1 < len(p) and p[idx + 1] == "=":
-                    continue
-                eq_pos.append(idx)
-        if len(eq_pos) != 1:
-            continue
-        a, b = p[: eq_pos[0]].strip(), p[eq_pos[0] + 1 :].strip()
-        ra = set(re.findall(r"\b([lr])\s*\.", a))
-        rb = set(re.findall(r"\b([lr])\s*\.", b))
-        if ra == {"l"} and rb == {"r"}:
-            out.append((a, b))
-        elif ra == {"r"} and rb == {"l"}:
-            out.append((b, a))
-    return out
-
-
-def _strip_alias(expr: str, alias: str) -> str:
-    return re.sub(rf"\b{alias}\s*\.\s*", "", expr)
+    if right is not df:
+        keyed = keyed.unionByName(
+            right.select(
+                *[F.expr(b).alias(k) for (_, b), k in zip(keys, names)],
+                F.lit(1).alias("__bc"),
+            )
+        )
+    return keyed
 
 
 def _governed_join(
@@ -228,7 +131,7 @@ def _governed_join(
     in the plan; Spark's exchange reuse serves the four consumers
     (semi/anti × l/r) from one broadcast.
     """
-    equi = extract_equi_components(br.rule)
+    equi = br.equi_components
     if not equi:
         raise ValueError(
             f"broadcast_hot_keys_above set on rule {br.rule!r}, but no "
@@ -236,19 +139,9 @@ def _governed_join(
             "(an OR rule cannot be hot-key split exactly)"
         )
     hk = [f"__hk{i}" for i in range(len(equi))]
-    l_keys = [
-        F.expr(_strip_alias(a, "l")).alias(k)
-        for (a, _), k in zip(equi, hk)
-    ]
-    keyed = df.select(*l_keys)
-    if right is not df:
-        r_keys = [
-            F.expr(_strip_alias(b, "r")).alias(k)
-            for (_, b), k in zip(equi, hk)
-        ]
-        keyed = keyed.unionByName(right.select(*r_keys))
     hot_keys = (
-        keyed.na.drop(subset=hk)
+        _hot_key_frame(df, right, br, hk)
+        .na.drop(subset=hk)
         .groupBy(*hk)
         .count()
         .filter(F.col("count") > br.broadcast_hot_keys_above)
@@ -369,12 +262,7 @@ def block_using_rules(
     # pure overhead (measured +0.1s on the single-rule o7 path).
     narrow = bool(retain_columns) and len(rules) > 1
     if narrow:
-        refs: set[str] = set()
-        for br in rules:
-            refs |= {
-                m.group(1)
-                for m in re.finditer(r"\b[lr]\s*\.\s*(\w+)", br.rule)
-            }
+        refs = set().union(*(br.columns for br in rules))
         keep = [uid]
         if link_mode or link_only:
             keep.append(source_col)
@@ -405,11 +293,13 @@ def block_using_rules(
 
     outputs: list[DataFrame] = []
     for i, br in enumerate(rules):
-        if not rule_has_equi_component(br.rule) and not allow_cartesian:
+        if not br.equi_components and not allow_cartesian:
             raise ValueError(
-                f"blocking rule {br.rule!r} has no equi component; it would "
-                "plan as a nested-loop cartesian join. Pass "
-                "allow_cartesian=True only if you really mean it."
+                f"blocking rule {br.rule!r} has no equi component (a "
+                "top-level AND with at least one f(l) = g(r) equality); "
+                "it would plan as a nested-loop cartesian join. Split an "
+                "OR rule into separate rules, or pass allow_cartesian=True "
+                "only if you really mean it."
             )
         conds = [f"({br.rule})"]
         if pair_ordering:
@@ -649,17 +539,6 @@ def cumulative_comparisons_from_blocking_rules(
     )
 
 
-def skew_report(
-    df: DataFrame, key_cols: list[str], top_n: int = 20
-) -> DataFrame:
-    """The skew governor's input: largest blocks for an equi key.
-
-    Feeds the decision: salt factor per rule / broadcast path / per-block
-    cap (SURVEY.md §4 'skew governor').
-    """
-    return block_census(df, key_cols).orderBy(F.desc("block_size")).limit(top_n)
-
-
 def estimate_avg_row_bytes(df: DataFrame, sample_rows: int = 10_000) -> float:
     """Cheap average serialized-row-width estimate for broadcast sizing.
 
@@ -727,7 +606,7 @@ def tune_blocking_rules(
     tuned: list[BlockingRule] = []
     report: list[dict] = []
     for br in rules:
-        equi = extract_equi_components(br.rule)
+        equi = br.equi_components
         if not equi:
             tuned.append(br)
             report.append(
@@ -735,27 +614,9 @@ def tune_blocking_rules(
             )
             continue
         kn = [f"__tk{i}" for i in range(len(equi))]
-        l_keys = [
-            F.expr(_strip_alias(a, "l")).alias(k)
-            for (a, _), k in zip(equi, kn)
-        ]
-        # __bc marks rows of the side _governed_join broadcasts (r_hot
-        # comes from the right frame; in dedupe mode right IS df, so
-        # every row counts against the broadcast budget).
-        if df_right is not None:
-            r_keys = [
-                F.expr(_strip_alias(b, "r")).alias(k)
-                for (_, b), k in zip(equi, kn)
-            ]
-            keyed = df.select(*l_keys).withColumn(
-                "__bc", F.lit(0)
-            ).unionByName(
-                df_right.select(*r_keys).withColumn("__bc", F.lit(1))
-            )
-        else:
-            keyed = df.select(*l_keys).withColumn("__bc", F.lit(1))
         census = (
-            keyed.na.drop(subset=kn)
+            _hot_key_frame(df, bcast_side, br, kn)
+            .na.drop(subset=kn)
             .groupBy(*kn)
             .agg(
                 F.count(F.lit(1)).alias("c"),

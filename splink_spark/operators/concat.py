@@ -4,8 +4,8 @@ reference: splink/vertically_concatenate.py::vertically_concatenate_sql.
 
 Spark-first: ``unionByName`` over the inputs with a ``source_dataset``
 literal per table. The reference also injects a ``__splink_salt`` random()
-column; ours is deterministic (``xxhash64`` of the unique id) so that
-checkpoint resume and tests are stable (SURVEY.md §7.3(e)).
+column; salting here happens inside the blocking join instead
+(``BlockingRule.salting_partitions``, see operators/blocking.py).
 """
 
 from __future__ import annotations
@@ -15,15 +15,10 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SALT_COLUMN = "__salt"
-
 
 def vertically_concatenate(
     dfs: dict[str, DataFrame],
     source_dataset_column: str = "source_dataset",
-    unique_id_column: str = "unique_id",
-    add_salt: bool = False,
-    salt_partitions: int = 16,
 ) -> DataFrame:
     """UNION ALL the inputs, tagging each row with its source dataset name.
 
@@ -35,12 +30,4 @@ def vertically_concatenate(
         if source_dataset_column not in df.columns:
             df = df.withColumn(source_dataset_column, F.lit(name))
         tagged.append(df)
-    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
-    if add_salt:
-        out = out.withColumn(
-            SALT_COLUMN,
-            F.pmod(F.xxhash64(F.col(unique_id_column)), F.lit(salt_partitions)).cast(
-                "int"
-            ),
-        )
-    return out
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)

@@ -82,7 +82,6 @@ def predict_from_comparison_vectors(
     settings: Settings,
     threshold_match_probability: float | None = None,
     threshold_match_weight: float | None = None,
-    keep_bf_columns: bool = False,
 ) -> DataFrame:
     """Append bf_<name>, match_weight, match_probability; optional filter.
 
@@ -112,9 +111,7 @@ def predict_from_comparison_vectors(
         out = out.filter(F.col("match_weight") >= threshold_match_weight)
     if threshold_match_probability is not None:
         out = out.filter(F.col("match_probability") >= threshold_match_probability)
-    if not keep_bf_columns:
-        out = out.drop(*bf_cols)
-    return out
+    return out.drop(*bf_cols)
 
 
 def match_weight_breakdown(

@@ -27,6 +27,7 @@ backend random() (SURVEY.md §7.3(e)).
 from __future__ import annotations
 
 import itertools
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 
 from splink_spark.model import NULL_GAMMA, BlockingRule, Settings
 from splink_spark.operators.blocking import block_using_rules
+from splink_spark.operators.tf import tf_column_name
 from splink_spark.operators.vectors import compute_comparison_vectors
 
 
@@ -257,27 +259,13 @@ def estimate_u(
                     F.col(f"l.{c}").alias(f"{c}_l"),
                     F.col(f"r.{c}").alias(f"{c}_r"),
                 )
-                for c in _comparison_input_columns(settings)
+                for c in pair_columns(settings)
             ),
         )
     )
     vectors = compute_comparison_vectors(pairs, settings)
     patterns, counts = collect_histogram(vectors, settings)
-    out: list[np.ndarray] = []
-    for ci, comp in enumerate(settings.comparisons):
-        K = comp.num_scored_levels
-        g = patterns[:, ci]
-        valid = g != NULL_GAMMA
-        denom = counts[valid].sum()
-        if denom == 0:
-            out.append(np.full(K, 1.0 / K))
-            continue
-        out.append(
-            np.array(
-                [counts[valid & (g == k)].sum() / denom for k in range(K)]
-            )
-        )
-    return out
+    return _level_shares(patterns, counts, settings)
 
 
 def _level_shares(
@@ -303,12 +291,20 @@ def _level_shares(
     return out
 
 
-def _comparison_input_columns(settings: Settings) -> list[str]:
+def pair_columns(
+    settings: Settings, tf_columns: Sequence[str] = ()
+) -> list[str]:
+    """The record columns a pair row carries (as ``<c>_l`` / ``<c>_r``):
+    every comparison input column, then the TF lookup column of each of
+    ``tf_columns`` — the ones the input frame has joined on."""
     cols: list[str] = []
     for comp in settings.comparisons:
         for c in comp.input_columns:
             if c not in cols:
                 cols.append(c)
+    for c in tf_columns:
+        if tf_column_name(c) not in cols:
+            cols.append(tf_column_name(c))
     return cols
 
 
@@ -349,7 +345,7 @@ def estimate_m_from_label_column(
     uid = settings.uid
     rule = BlockingRule(rule=f"l.{label_column} = r.{label_column}")
     pairs = block_using_rules(
-        df, [rule], uid=uid, retain_columns=_comparison_input_columns(settings)
+        df, [rule], uid=uid, retain_columns=pair_columns(settings)
     )
     vectors = compute_comparison_vectors(pairs, settings)
     patterns, counts = collect_histogram(vectors, settings)
@@ -374,7 +370,7 @@ def estimate_m_from_pairwise_labels(
     uid = settings.uid
     if "clerical_match_score" in labels.columns:
         labels = labels.filter(F.col("clerical_match_score") >= 0.5)
-    cols = _comparison_input_columns(settings)
+    cols = pair_columns(settings)
     left = df.select(
         F.col(uid).alias(f"{uid}_l"),
         *[F.col(c).alias(f"{c}_l") for c in cols],
@@ -397,12 +393,6 @@ def estimate_m_from_pairwise_labels(
 # O12 — EM training session
 # ---------------------------------------------------------------------------
 
-def _rule_mentions_column(rule: str, col: str) -> bool:
-    import re
-
-    return bool(re.search(rf"\b{re.escape(col)}\b", rule))
-
-
 def estimate_parameters_using_em(
     df: DataFrame,
     settings: Settings,
@@ -412,21 +402,23 @@ def estimate_parameters_using_em(
 ) -> EMResult:
     """One EM training session under a training blocking rule.
 
-    Comparisons whose input columns all appear in the rule are fixed
-    (their gamma is constant under the rule). The session prior is
-    adjusted for the blocked subpopulation by multiplying prior odds with
-    the fixed comparisons' exact-match Bayes factors
+    Comparisons whose input columns are all read by the rule (as
+    ``l.<c>`` / ``r.<c>``) are fixed (their gamma is constant under the
+    rule). The session prior is adjusted for the blocked subpopulation
+    by multiplying prior odds with the fixed comparisons' exact-match
+    Bayes factors
     (reference: splink/em_training_session.py::
     _blocking_adjusted_probability_two_random_records_match).
     Trained m/u are written back into ``settings`` in place for the
     non-fixed comparisons.
     """
     uid = settings.uid
-    fixed: set[int] = set()
-    for ci, comp in enumerate(settings.comparisons):
-        cols = comp.input_columns
-        if cols and all(_rule_mentions_column(training_rule.rule, c) for c in cols):
-            fixed.add(ci)
+    fixed = {
+        ci
+        for ci, comp in enumerate(settings.comparisons)
+        if comp.input_columns
+        and set(comp.input_columns) <= training_rule.columns
+    }
 
     # Blocking-adjusted prior: multiply prior odds by the BF of the level
     # the training rule forces for each fixed comparison (its top level).
@@ -443,7 +435,7 @@ def estimate_parameters_using_em(
         df,
         [training_rule],
         uid=uid,
-        retain_columns=_comparison_input_columns(settings),
+        retain_columns=pair_columns(settings),
     )
     vectors = compute_comparison_vectors(pairs, settings)
     patterns, counts = collect_histogram(vectors, settings)
@@ -498,8 +490,13 @@ def _by_gamma(comp, which: str) -> np.ndarray:
     return vals / s if s > 0 else np.full(K, 1.0 / K)
 
 
-def apply_u_estimates(settings: Settings, u: list[np.ndarray]) -> None:
-    """Write random-sampling u estimates into the model."""
+def apply_estimates(
+    settings: Settings, which: str, values: list[np.ndarray]
+) -> None:
+    """Write per-comparison ``m`` or ``u`` estimates (indexed by gamma)
+    into every scored level of the model."""
     for ci, comp in enumerate(settings.comparisons):
         for lv in comp.scored_levels:
-            lv.u_probability = float(u[ci][comp.gamma_of(lv)])
+            setattr(
+                lv, f"{which}_probability", float(values[ci][comp.gamma_of(lv)])
+            )

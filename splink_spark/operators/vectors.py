@@ -17,24 +17,14 @@ from pyspark.sql import DataFrame
 from splink_spark.model import Settings
 
 
-def compute_comparison_vectors(
-    pairs: DataFrame,
-    settings: Settings,
-    retain_columns: list[str] | None = None,
-) -> DataFrame:
-    """Append ``gamma_<name>`` int columns to the pair table.
-
-    ``retain_columns`` are pair-suffixed columns (already ``_l``/``_r``)
-    to keep; by default all existing columns are kept (Catalyst prunes
-    unused ones from the physical plan anyway — at plan level we keep the
-    logical width small only when asked, mirroring the reference's
-    retain_matching_columns=False).
+def compute_comparison_vectors(pairs: DataFrame, settings: Settings) -> DataFrame:
+    """Append ``gamma_<name>`` int columns to the pair table. All
+    existing columns are kept; Catalyst prunes the unused ones from the
+    physical plan.
     """
     from pyspark.sql import functions as F
 
     out = pairs
-    if retain_columns is not None:
-        out = out.select(*retain_columns)
     # shared derived columns FIRST, each its own projection step so the
     # optimizer cannot inline a non-cheap expression into multiple
     # consumers (CollapseProject duplicates only cheap aliases) — the

@@ -34,12 +34,13 @@ from splink_spark.operators.tf import (
 )
 from splink_spark.operators.training import (
     EMResult,
-    apply_u_estimates,
+    apply_estimates,
     estimate_m_from_label_column,
     estimate_m_from_pairwise_labels,
     estimate_parameters_using_em,
     estimate_probability_two_random_records_match,
     estimate_u,
+    pair_columns,
 )
 from splink_spark.operators.vectors import compute_comparison_vectors
 from splink_spark.plans.validate import validate_settings_against_schemas
@@ -101,7 +102,6 @@ class Linker:
             df = vertically_concatenate(
                 self.inputs,
                 source_dataset_column=self.settings.source_dataset_column_name,
-                unique_id_column=self.settings.uid,
             )
             self._tf_tables = {
                 c: term_frequency_table(df, c).persist(
@@ -121,16 +121,7 @@ class Linker:
     # -- stage: blocking + vectors + predict ------------------------------
 
     def _retain_columns(self) -> list[str]:
-        cols: list[str] = []
-        for comp in self.settings.comparisons:
-            for c in comp.input_columns:
-                if c not in cols:
-                    cols.append(c)
-        for c in self.tf_columns():
-            tc = tf_column_name(c)
-            if tc not in cols:
-                cols.append(tc)
-        return cols
+        return pair_columns(self.settings, self.tf_columns())
 
     def blocked_pairs(
         self, rules: list[BlockingRule] | None = None
@@ -211,17 +202,11 @@ class Linker:
 
         reference: splink/inference.py::deterministic_link.
         """
-        pairs = (
-            self.blocked_pairs()
-            if rules is None
-            else self.blocked_pairs(
-                [
-                    r if isinstance(r, BlockingRule) else BlockingRule(rule=r)
-                    for r in rules
-                ]
-            )
+        if rules is not None:
+            rules = [BlockingRule.coerce(r) for r in rules]
+        return self.blocked_pairs(rules).withColumn(
+            "match_probability", F.lit(1.0)
         )
-        return pairs.withColumn("match_probability", F.lit(1.0))
 
     # -- training ----------------------------------------------------------
 
@@ -231,15 +216,12 @@ class Linker:
         u = estimate_u(
             self.concat_with_tf(), self.settings, max_pairs=max_pairs, seed=seed
         )
-        apply_u_estimates(self.settings, u)
+        apply_estimates(self.settings, "u", u)
 
     def estimate_probability_two_random_records_match(
         self, deterministic_rules: list[BlockingRule | str], recall: float
     ) -> float:
-        rules = [
-            r if isinstance(r, BlockingRule) else BlockingRule(rule=r)
-            for r in deterministic_rules
-        ]
+        rules = [BlockingRule.coerce(r) for r in deterministic_rules]
         lam = estimate_probability_two_random_records_match(
             self.concat_with_tf(), rules, recall, uid=self.settings.uid
         )
@@ -253,13 +235,11 @@ class Linker:
         model m/u is the MEAN of the sessions that trained it
         (reference: splink/em_training_session.py +
         splink/settings.py — estimates averaged per comparison)."""
-        rule = (
-            blocking_rule
-            if isinstance(blocking_rule, BlockingRule)
-            else BlockingRule(rule=blocking_rule)
-        )
         result = estimate_parameters_using_em(
-            self.concat_with_tf(), self.settings, rule, fix_u=fix_u
+            self.concat_with_tf(),
+            self.settings,
+            BlockingRule.coerce(blocking_rule),
+            fix_u=fix_u,
         )
         for ci, comp in enumerate(self.settings.comparisons):
             if ci in result.fixed_comparisons:
@@ -284,9 +264,7 @@ class Linker:
         m = estimate_m_from_label_column(
             self.concat_with_tf(), self.settings, label_column
         )
-        for ci, comp in enumerate(self.settings.comparisons):
-            for lv in comp.scored_levels:
-                lv.m_probability = float(m[ci][comp.gamma_of(lv)])
+        apply_estimates(self.settings, "m", m)
 
     def estimate_m_from_pairwise_labels(self, labels: DataFrame) -> None:
         """Direct m estimates from a labelled pair table with
@@ -299,9 +277,7 @@ class Linker:
         m = estimate_m_from_pairwise_labels(
             self.concat_with_tf(), self.settings, labels
         )
-        for ci, comp in enumerate(self.settings.comparisons):
-            for lv in comp.scored_levels:
-                lv.m_probability = float(m[ci][comp.gamma_of(lv)])
+        apply_estimates(self.settings, "m", m)
 
     # -- clustering --------------------------------------------------------
 
@@ -359,7 +335,6 @@ class Linker:
         new = vertically_concatenate(
             {"__new__": new_records},
             source_dataset_column=self.settings.source_dataset_column_name,
-            unique_id_column=self.settings.uid,
         )
         if self.tf_columns():
             new = join_term_frequencies(new, self.tf_tables())
@@ -439,16 +414,13 @@ class Linker:
     def count_num_comparisons_from_blocking_rule(self, rule) -> int:
         """reference: splink/linker.py::
         Linker.count_num_comparisons_from_blocking_rule."""
-        from splink_spark.model import BlockingRule
         from splink_spark.operators.blocking import (
             count_comparisons_from_blocking_rule,
         )
 
-        if isinstance(rule, str):
-            rule = BlockingRule(rule)
         return count_comparisons_from_blocking_rule(
             self.concat_with_tf(),
-            rule,
+            BlockingRule.coerce(rule),
             uid=self.settings.uid,
             link_mode=self.link_mode,
             source_col=self.settings.source_dataset_column_name,

@@ -12,20 +12,11 @@ runs at Linker construction.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 
 from splink_spark.model import Settings
 
-_LR_COL_RE = re.compile(r"\b[lr]\.(\w+)")
-
 VALID_LINK_TYPES = ("dedupe_only", "link_only", "link_and_dedupe")
-
-
-def columns_referenced_by_rule(rule: str) -> set[str]:
-    """Column names referenced as ``l.<col>`` / ``r.<col>`` in a rule."""
-    return set(_LR_COL_RE.findall(rule))
 
 
 def validate_settings_against_schemas(
@@ -73,7 +64,7 @@ def validate_settings_against_schemas(
                         f"input {name!r}"
                     )
         for br in settings.blocking_rules:
-            for c in columns_referenced_by_rule(br.rule) - derived:
+            for c in sorted(br.columns - derived):
                 if c.startswith("tf_"):
                     continue
                 if c not in cols:

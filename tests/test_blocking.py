@@ -101,10 +101,64 @@ def test_salted_rule_produces_identical_pairs(docs):
     assert a == b
 
 
-def test_cartesian_guard():
+def test_cartesian_guard(spark):
     assert not rule_has_equi_component("abs(l.x - r.x) < 2")
     assert rule_has_equi_component("l.a = r.a AND abs(l.x - r.x) < 2")
     assert rule_has_equi_component("r.a = l.a")
+    assert rule_has_equi_component("L.a = R.a")
+    # an equality inside a top-level OR is no join key: the OR plans as
+    # a nested-loop join, so the guard refuses it ...
+    or_rule = BlockingRule("l.a = r.a OR l.b = r.b")
+    assert not rule_has_equi_component(or_rule.rule)
+    assert not rule_has_equi_component("(l.a = r.a OR l.b = r.b)")
+    rows = [(i, i % 3, i % 5) for i in range(30)]
+    df = spark.createDataFrame(rows, "unique_id long, a long, b long")
+    with pytest.raises(ValueError, match="equi component"):
+        block_using_rules(df, [or_rule])
+    # ... unless asked for, and then it still runs: the same pairs as
+    # the rule split in two (NOT-previous-rules dedup keeps that exact)
+    ours = block_using_rules(df, [or_rule], allow_cartesian=True)
+    split = block_using_rules(
+        df, [BlockingRule("l.a = r.a"), BlockingRule("l.b = r.b")]
+    )
+
+    def ids(frame):
+        return {
+            (r[0], r[1])
+            for r in frame.select("unique_id_l", "unique_id_r").collect()
+        }
+
+    assert ids(ours) == ids(split)
+    assert len(ids(ours)) == sum(
+        1
+        for i in range(30)
+        for j in range(i + 1, 30)
+        if i % 3 == j % 3 or i % 5 == j % 5
+    )
+
+
+@pytest.mark.parametrize("retain", [[], ["c"]])
+def test_uppercase_aliases_match_lowercase(spark, retain):
+    """Spark resolves the l/r aliases case-insensitively, so must the
+    engine: with two rules and retain_columns the join inputs are
+    narrowed to the columns the rules read, and ``L.a`` must count."""
+    rows = [(i, i % 4, i % 6, f"c{i}") for i in range(40)]
+    df = spark.createDataFrame(
+        rows, "unique_id long, a long, b long, c string"
+    )
+
+    def pairs(rules):
+        out = block_using_rules(
+            df, [BlockingRule(r) for r in rules], retain_columns=retain
+        )
+        return sorted(
+            tuple(r) for r in out.select(*sorted(out.columns)).collect()
+        )
+
+    for rules in (["l.a = r.a", "l.b = r.b"], ["l.a = r.a"]):
+        upper = [r.replace("l.", "L.").replace("r.", "R.") for r in rules]
+        lower = pairs(rules)
+        assert lower and pairs(upper) == lower
 
 
 def test_retained_columns_suffixed(docs):
@@ -533,13 +587,19 @@ def test_tune_blocking_rules_byte_budget_fallback(spark):
     assert tuned2[0].broadcast_hot_keys_above == 32
 
 
-def test_rule_tokenizer_quote_aware():
+def test_rule_tokenizer_quote_aware(spark):
     """String literals containing AND/OR, parens, or '=' must not
     corrupt conjunct splitting or equi extraction (ADVICE r4)."""
+    from splink_spark.model import Comparison, Settings
+    from splink_spark.functions.comparators import (
+        else_level,
+        exact_match_level,
+    )
     from splink_spark.operators.blocking import (
         extract_equi_components,
         rule_has_equi_component,
     )
+    from splink_spark.operators.training import estimate_parameters_using_em
 
     # ')' inside a literal used to corrupt depth tracking
     r = "l.tag = ':)' AND l.key = r.key"
@@ -564,6 +624,76 @@ def test_rule_tokenizer_quote_aware():
         "least(l.a, l.b) = least(r.a, r.b) AND "
         "greatest(l.a, l.b) = greatest(r.a, r.b)"
     )
+    # one grammar: either alias case, spaces around the dot, backticks
+    assert BlockingRule("L.a = R . b AND l.`my col` = r.`my col`").columns == {
+        "a", "b", "my col"
+    }
+    assert extract_equi_components("R.key = L.key") == [("L.key", "R.key")]
+    # parenthesised AND groups flatten; CASE..END nests like parens;
+    # a backslash-escaped quote stays inside its literal
+    assert extract_equi_components("(l.a = r.a AND l.b = r.b)") == [
+        ("l.a", "r.a"),
+        ("l.b", "r.b"),
+    ]
+    lhs = "case when l.x = '' then null else l.x end"
+    rhs = "case when r.x = '' then null else r.x end"
+    assert extract_equi_components(f"{lhs} = {rhs}") == [(lhs, rhs)]
+    r = "l.t <> 'a\\' AND l.q = r.q' AND l.key = r.key"
+    assert extract_equi_components(r) == [("l.key", "r.key")]
+    # NOT binds looser than '=': no join key, so the guard refuses it
+    assert not rule_has_equi_component("NOT l.a = r.a")
+    # a literal that spells a column reference reads no column ...
+    r = "l.key = r.key AND l.tag <> 'l.name = r.name' AND r.tag <> 'it''s r.x'"
+    assert BlockingRule(r).columns == {"key", "tag"}
+    assert extract_equi_components(r) == [("l.key", "r.key")]
+    # ... so it adds no column to the narrow join inputs (the
+    # checkpointed LogicalRDDs of the multi-rule retain_columns path)
+    df = spark.range(30).selectExpr(
+        "id AS unique_id",
+        "id % 5 AS key",
+        "'t' AS tag",
+        "concat('n', id % 3) AS nm",
+        "'wide' AS payload",
+    )
+    pairs = block_using_rules(
+        df,
+        [
+            BlockingRule("l.key = r.key AND l.tag <> 'l.payload'"),
+            BlockingRule("l.nm = r.nm"),
+        ],
+        retain_columns=["nm"],
+    )
+    assert pairs.count() > 0
+    inputs = [
+        line
+        for line in pairs._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+        .splitlines()
+        if "LogicalRDD" in line
+    ]
+    assert inputs and not any("payload" in line for line in inputs)
+    # ... and fixes no comparison in EM: `nm` appears only in a literal
+    settings = Settings(
+        comparisons=[
+            Comparison(
+                "nm",
+                input_columns=["nm"],
+                levels=[
+                    exact_match_level("nm", m=0.9, u=0.1),
+                    else_level(m=0.1, u=0.9),
+                ],
+            )
+        ],
+        probability_two_random_records_match=0.01,
+    )
+    literal_only = BlockingRule("l.key = r.key AND l.tag <> 'l.nm'")
+    assert estimate_parameters_using_em(
+        df, settings, literal_only
+    ).fixed_comparisons == frozenset()
+    assert estimate_parameters_using_em(
+        df, settings, BlockingRule("l.key = r.key AND L.nm = R.nm")
+    ).fixed_comparisons == frozenset({0})
 
 
 def test_linker_tune_blocking_rules_surface(spark):

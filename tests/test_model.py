@@ -82,6 +82,11 @@ def test_settings_json_roundtrip():
     assert s2.to_dict() == s.to_dict()
     assert s2.blocking_rules[0].salting_partitions == 4
     assert s2.prior_match_weight == pytest.approx(math.log2(0.01 / 0.99))
+    # a model saved while Settings still had retain_matching_columns
+    # loads; the key is ignored
+    old = s.to_dict()
+    old["retain_matching_columns"] = False
+    assert Settings.from_dict(old).to_dict() == s.to_dict()
 
 
 def test_prior_validation():

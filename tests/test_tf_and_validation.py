@@ -200,6 +200,29 @@ def test_validation_missing_columns(spark, docs):
     with pytest.raises(ValueError):
         Linker(docs, bad)
 
+    # rule columns are read in either alias case, with spaces around
+    # the dot or backtick-quoted
+    for rule, col in [
+        ("L.missing = R.missing", "missing"),
+        ("l . spaced = r . spaced", "spaced"),
+        ("l.`quoted` = r.`quoted`", "quoted"),
+    ]:
+        upper = Settings(
+            blocking_rules=[BlockingRule(rule)],
+            comparisons=[
+                Comparison(
+                    "lang",
+                    input_columns=["lang"],
+                    levels=[
+                        exact_match_level("lang", m=0.9, u=0.1),
+                        else_level(m=0.1, u=0.9),
+                    ],
+                )
+            ],
+        )
+        with pytest.raises(ValueError, match=f"column '{col}' not in"):
+            validate_settings_against_schemas(upper, {"docs": docs})
+
 
 def test_validation_accepts_derived_columns(spark, docs):
     ok = Settings(
